@@ -24,13 +24,19 @@ thin facade that keeps the reference's ergonomics:
 - ``to_pandas`` / ``to_parquet`` / ``save`` — materialization sinks.
 
 Row identity (the reference leans on implicit file order, SURVEY §7.4
-#1) is made explicit: a ``_row_id`` ordinal is captured from the file
-scan order once, at construction, and used for positional alignment of
-array-like assignment and ordered iteration. After a ``filter``/
-``query`` the surviving ``_row_id`` values are sparse; positional
-operations (chunk iteration, array-like assignment, boolean-array
-masks) re-rank them into a dense ordinal first — distributed, via
-range repartitioning (no single-partition window).
+#1) is made explicit, and paid for only where position matters. The
+constructor tags rows with ``monotonically_increasing_id()`` as
+``_row_id``: ``partition_id << 33 + seq``, monotone in file scan order
+but sparse, and a projection rather than a job — so opening a frame,
+``shape``, aggregates, mask filters and ``assign`` run only the jobs
+their answer needs. Ordered reads (``head``, ``to_pandas``,
+``LazyColumn.to_pandas``) sort by the sparse id, which orders rows
+exactly as a dense ordinal would. Positional operations (chunk
+iteration, array-like assignment, boolean-array masks) need dense
+ranks; they re-rank ``_row_id`` into [0, n) on demand — distributed,
+by a window over id buckets whose offsets come from a per-bucket count
+(no single-partition window), computed from the id values alone so the
+ranks do not depend on how a shuffle happened to split the rows.
 """
 
 from __future__ import annotations
@@ -42,10 +48,13 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from parq_tools_spark.plans.query_parser import build_filter_expression
 
 _ROW_ID = "_row_id"
+#: ``_row_id`` low bits spanned by one re-ranking bucket (2**20 ids).
+_BUCKET_BITS = 20
 
 #: Hard cap on driver-resident values accepted by array-like
 #: ``__setitem__`` / boolean-array ``.loc`` masks. Larger assignments
@@ -68,37 +77,52 @@ __all__ = [
 def with_row_ordinal(df: DataFrame, name: str = _ROW_ID) -> DataFrame:
     """Attach a dense 0-based ordinal in scan order — distributed.
 
-    A naive ``row_number() OVER ()`` collapses the data to ONE
-    partition (WindowExec warns exactly this). Instead:
-    ``monotonically_increasing_id`` is ``partition_id << 33 + seq``, so
-    the within-partition sequence is ``mono - min(mono)`` per
-    partition; a tiny per-partition (count, min) aggregation on the
-    driver yields cumulative offsets, joined back as a broadcast map.
-    Cost: one small agg + a map-side join — no global shuffle, order
-    identical to the reference's file scan order.
+    The rows are tagged with ``monotonically_increasing_id`` and the
+    tags re-ranked by :func:`_rerank_dense` (never a single-partition
+    ``row_number() OVER ()`` window).
     """
-    tagged = df.withColumn("_mono", F.monotonically_increasing_id()).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    stats = (
-        tagged.groupBy("_pid")
-        .agg(F.count(F.lit(1)).alias("_cnt"), F.min("_mono").alias("_min_mono"))
-        .collect()
-    )
-    offset = 0
-    rows = []
-    for r in sorted(stats, key=lambda r: r["_pid"]):
-        rows.append((r["_pid"], offset, r["_min_mono"]))
-        offset += r["_cnt"]
-    spark = df.sparkSession
-    offsets = spark.createDataFrame(
-        rows, "_pid int, _offset long, _min_mono long"
-    )
+    return _rerank_dense(df.withColumn(name, F.monotonically_increasing_id()), name)
+
+
+def _rerank_dense(df: DataFrame, name: str) -> DataFrame:
+    """Replace the unique ids in column ``name`` with their 0-based rank.
+
+    Ids are bucketed by their high bits (``id >> _BUCKET_BITS``); a small
+    per-bucket count, collected on the driver, gives each bucket's
+    offset, and a window partitioned by bucket ranks rows inside it. A
+    scan-order id (``partition << 33 + seq``) never shares a bucket with
+    another partition's, and a bucket holds at most 2**20 ids, so no
+    window task sees more than ~1M rows. Every step is a function of the
+    id values alone — not of how rows happen to be partitioned — so the
+    offsets collected in one job stay valid for the job that uses them.
+    """
+    bucket = F.shiftright(F.col(name), _BUCKET_BITS)
+    counts = df.groupBy(bucket.alias("_bucket")).count().collect()
+    rows, offset = [], 0
+    for r in sorted(counts, key=lambda r: r["_bucket"]):
+        rows.append((r["_bucket"], offset))
+        offset += r["count"]
+    offsets = df.sparkSession.createDataFrame(rows, "_bucket long, _offset long")
+    rank = F.row_number().over(Window.partitionBy("_bucket").orderBy(name))
     return (
-        tagged.join(F.broadcast(offsets), on="_pid", how="inner")
-        .withColumn(name, F.col("_offset") + (F.col("_mono") - F.col("_min_mono")))
-        .drop("_mono", "_pid", "_offset", "_min_mono")
+        df.withColumn("_bucket", bucket)
+        .join(F.broadcast(offsets), on="_bucket", how="inner")
+        .withColumn(name, F.col("_offset") + rank - 1)
+        .drop("_bucket", "_offset")
     )
+
+
+def _tag_scan_order(df: DataFrame) -> DataFrame:
+    """Tag rows with a sparse ``_row_id`` that is monotone in scan order.
+
+    ``monotonically_increasing_id`` is evaluated in the projection right
+    above the scan, so tagging launches no job; filters stay above it
+    (Catalyst never pushes a predicate through a nondeterministic
+    projection), so surviving rows keep their scan-time ids.
+    :func:`_rerank_dense` turns them dense when a positional operation
+    needs it.
+    """
+    return df.withColumn(_ROW_ID, F.monotonically_increasing_id())
 
 
 def _index_cols_from_pandas_metadata(
@@ -626,11 +650,10 @@ class LazySparkDF:
             # come from the file's pandas schema metadata when present
             index_columns = _index_cols_from_pandas_metadata(path, base.columns)
         self._index_columns = list(index_columns or [])
-        # explicit, distributed row ordinal in scan order (no global window)
-        self._df = with_row_ordinal(base, _ROW_ID)
+        self._df = _tag_scan_order(base)
         self._user_columns = [c for c in base.columns]
-        # _row_id values are dense [0, n) until a filter sparsifies them
-        self._dense = True
+        # scan-order ids are sparse until a positional op densifies them
+        self._dense = False
 
     # ------------------------------------------------------------ metadata
     @property
@@ -798,20 +821,16 @@ class LazySparkDF:
     def _densified(self) -> DataFrame:
         """Return ``_df`` with ``_row_id`` re-ranked to a dense [0, n).
 
-        After ``filter``/``query`` the surviving ordinals are sparse;
-        positional operations need dense ranks. Re-ranking is
-        distributed: range-repartition on ``_row_id`` (partition *p*
-        holds smaller ordinals than *p+1*), sort within partitions,
-        then reuse the per-partition offset trick — one range shuffle,
-        never a single-partition window. Dense frames skip all of it.
+        Scan-order ids are sparse from construction, and a ``filter``
+        leaves gaps in any ordinal; positional operations need dense
+        ranks, so they (and only they) pay for this: one small
+        per-bucket count job plus one windowed shuffle
+        (:func:`_rerank_dense`), never a single-partition window.
+        Dense frames skip all of it.
         """
         if self._dense:
             return self._df
-        n_parts = max(int(self._spark.conf.get("spark.sql.shuffle.partitions")), 1)
-        ranged = self._df.repartitionByRange(
-            n_parts, F.col(_ROW_ID)
-        ).sortWithinPartitions(_ROW_ID)
-        return with_row_ordinal(ranged.drop(_ROW_ID), _ROW_ID)
+        return _rerank_dense(self._df, _ROW_ID)
 
     def head(self, n: int = 5) -> pd.DataFrame:
         return self._ordered().select(*self._user_columns).limit(n).toPandas()
@@ -853,8 +872,9 @@ class LazySparkDF:
 
     def info(self) -> str:
         """Plan-level summary string (reference ``info()`` shape:
-        columns, dtypes, row count) — one footer-cheap count, no scan
-        of column data."""
+        columns, dtypes, row count) — one count job that reads no
+        column data; the row ordinal costs nothing until a positional
+        operation asks for it."""
         n = len(self)
         dtypes = self.dtypes
         lines = [
@@ -981,9 +1001,9 @@ class LazySparkDF:
         from parq_tools_spark.sources.parquet_io import read_parquet
 
         base = read_parquet(self._spark, path)
-        self._df = with_row_ordinal(base, _ROW_ID)
+        self._df = _tag_scan_order(base)
         self._user_columns = [c for c in base.columns]
-        self._dense = True
+        self._dense = False
 
     save = to_parquet
 

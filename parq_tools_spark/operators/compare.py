@@ -7,10 +7,15 @@ definition that is unreproducible in any other engine (SURVEY §7.4 #5).
 Here equality is **logical**:
 
 - schema: column sets + Spark SQL types;
-- row counts;
-- content: symmetric ``exceptAll`` (order-insensitive multiset
-  equality) plus per-column commutative ``xxhash64`` fingerprints that
-  localize *which* columns differ, computed in one aggregation pass.
+- row counts, plus per-column commutative ``xxhash64`` fingerprints
+  that localize *which* columns differ — both sides' counts and
+  fingerprints come from ONE action (a tagged union of two single-row
+  aggregates);
+- content: order-insensitive multiset equality, checked only when the
+  counts and every fingerprint agree, in one more action: the two
+  projections are unioned with a ``+1`` / ``-1`` weight per side and
+  grouped on every compared column; any group whose weights do not
+  cancel is a row the two sides hold a different number of times.
 
 The result dict keeps the reference's report shape (match booleans +
 detail lists, ``parq_compare.py:30-38``) so callers can switch over.
@@ -20,7 +25,7 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parq_tools_spark.sources.parquet_io import read_parquet
@@ -33,6 +38,12 @@ __all__ = [
 ]
 
 
+def _fingerprint(column: str) -> Column:
+    """Commutative fingerprint aggregate of one column (see
+    :func:`column_fingerprints`)."""
+    return F.sum(F.xxhash64(F.col(column).cast("string")).cast("decimal(38,0)"))
+
+
 def column_fingerprints(df: DataFrame, columns: Sequence[str]) -> dict[str, int]:
     """Order-insensitive per-column fingerprint in ONE pass.
 
@@ -42,12 +53,24 @@ def column_fingerprints(df: DataFrame, columns: Sequence[str]) -> dict[str, int]
     are fingerprinted in a single ``agg`` (one job, one scan). The sum
     is taken in decimal(38,0) so it cannot overflow under ANSI mode.
     """
-    aggs = [
-        F.sum(F.xxhash64(F.col(c).cast("string")).cast("decimal(38,0)")).alias(c)
-        for c in columns
-    ]
-    row = df.agg(*aggs).collect()[0]
+    row = df.agg(*[_fingerprint(c).alias(c) for c in columns]).collect()[0]
     return {c: row[c] for c in columns}
+
+
+def _counts_and_fingerprints(
+    df1: DataFrame, df2: DataFrame, columns: Sequence[str]
+) -> tuple[list, list]:
+    """Row count followed by each column's fingerprint, for both sides,
+    collected in one action. Aggregates are aliased by position, so no
+    user column name can collide with the side tag."""
+    aggs = [F.count(F.lit(1)).alias("_n")] + [
+        _fingerprint(c).alias(f"_fp{i}") for i, c in enumerate(columns)
+    ]
+    sides = df1.agg(*aggs).select(F.lit(1).alias("_side"), "*").unionByName(
+        df2.agg(*aggs).select(F.lit(2).alias("_side"), "*")
+    )
+    rows = {r["_side"]: list(r)[1:] for r in sides.collect()}
+    return rows[1], rows[2]
 
 
 def compare_dataframes(
@@ -65,7 +88,9 @@ def compare_dataframes(
     dtype_mismatches = {
         c: (dtypes1[c], dtypes2[c]) for c in common if dtypes1[c] != dtypes2[c]
     }
-    n1, n2 = df1.count(), df2.count()
+    comparable = [c for c in common if c not in dtype_mismatches]
+    fingerprinted = comparable if check_content else []
+    (n1, *fp1), (n2, *fp2) = _counts_and_fingerprints(df1, df2, fingerprinted)
 
     report = {
         "row_counts": (n1, n2),
@@ -80,35 +105,28 @@ def compare_dataframes(
     if not check_content or not common:
         return report
 
-    comparable = [c for c in common if c not in dtype_mismatches]
     if not comparable:
         report["content_match"] = False
         return report
-    fp1 = column_fingerprints(df1, comparable)
-    fp2 = column_fingerprints(df2, comparable)
-    report["column_match"] = {c: fp1[c] == fp2[c] for c in comparable}
+    report["column_match"] = {c: a == b for c, a, b in zip(comparable, fp1, fp2)}
 
     if report["row_count_match"] and all(report["column_match"].values()):
-        # fingerprints can collide across columns jointly; confirm with
-        # multiset equality: per-row-value counts full-outer-joined on
-        # the grouping keys. One shuffle per side (the join reuses the
-        # aggs' hash partitioning — no extra exchange) and ONE action,
-        # vs two full exceptAll passes for the symmetric difference.
-        # The join must use NULL-SAFE equality (eqNullSafe): groupBy
-        # treats NULL keys as one group, but a null-unsafe join would
-        # never match them, reporting identical NULL-bearing frames as
-        # different (exceptAll's set semantics treat NULLs as equal).
-        a, b = df1.select(*comparable), df2.select(*comparable)
-        ka = a.groupBy(*comparable).agg(F.count(F.lit(1)).alias("_n1"))
-        kb = b.groupBy(*comparable).agg(F.count(F.lit(1)).alias("_n2")).select(
-            *[F.col(c).alias(f"_r_{c}") for c in comparable], "_n2"
+        # fingerprints can collide across columns jointly (a value
+        # swapped between rows keeps every column's multiset), so
+        # confirm with multiset equality: union both sides weighted +1
+        # / -1 and sum per distinct row — one shuffle, one action.
+        # groupBy treats NULLs as one key and normalizes NaN / -0.0, so
+        # no null-safe join condition is needed.
+        weight = "_w"
+        while weight in comparable:
+            weight = f"_{weight}"
+        signed = df1.select(*comparable, F.lit(1).alias(weight)).unionByName(
+            df2.select(*comparable, F.lit(-1).alias(weight))
         )
-        cond = None
-        for c in comparable:
-            term = ka[c].eqNullSafe(kb[f"_r_{c}"])
-            cond = term if cond is None else (cond & term)
-        diff = ka.join(kb, cond, "full").filter(
-            F.coalesce("_n1", F.lit(0)) != F.coalesce("_n2", F.lit(0))
+        diff = (
+            signed.groupBy(*comparable)
+            .agg(F.sum(weight).alias(weight))
+            .filter(F.col(weight) != 0)
         )
         report["content_match"] = diff.limit(1).count() == 0
     else:

@@ -9,8 +9,9 @@ pandas-metadata helpers (``metadata_utils.py:10-55``).
 - column metadata: ``StructField.metadata`` via ``df.withMetadata`` —
   persisted by Spark's Parquet writer in its own schema blob.
 - table metadata: Parquet key-value footer metadata has no Spark-side
-  writer, so it is stamped with a driver-side pyarrow footer rewrite
-  of the written parts (cheap: footer-only) — or kept in a sidecar.
+  writer, so it is stamped on the driver with pyarrow after the write:
+  every written part is read, decoded and re-encoded with the merged
+  footer metadata — O(data) driver work, not a footer-only patch.
 """
 
 from __future__ import annotations
@@ -81,8 +82,11 @@ def _part_files(path: str) -> list[str]:
 def set_table_metadata(path: str, metadata: Mapping[str, str]) -> None:
     """Stamp table-level key-value metadata onto Parquet footers (F7).
 
-    Footer-only rewrite on the driver: row groups are not re-encoded,
-    so cost is O(parts), independent of data size.
+    Each part file is read whole into the driver (``pq.read_table``)
+    and written back with the merged schema metadata
+    (``pq.write_table``), so every row group is decoded and re-encoded:
+    cost and driver memory grow with the data (one part at a time),
+    not only with the number of parts.
     """
     import pyarrow.parquet as pq
 

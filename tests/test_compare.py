@@ -66,6 +66,53 @@ def test_compare_identical_frames_with_nulls(spark):
     assert compare_dataframes(df, df2)["content_match"] is False
 
 
+def _shuffled(spark, df):
+    rows = df.collect()
+    return spark.createDataFrame(rows[1::2] + rows[::2], df.schema)
+
+
+def test_cross_row_swap_caught_by_multiset_check(spark):
+    """Swapping a value between rows keeps every column's multiset (and
+    so every fingerprint): only the row-level check can see it."""
+    df1 = spark.createDataFrame([(1, "a"), (2, "b")], "k int, s string")
+    df2 = spark.createDataFrame([(1, "b"), (2, "a")], "k int, s string")
+    r = compare_dataframes(df1, df2)
+    assert r["row_count_match"] and all(r["column_match"].values())
+    assert r["content_match"] is False
+    assert compare_dataframes(df1, _shuffled(spark, df1))["content_match"] is True
+
+
+def test_duplicate_multiplicity_difference_caught(spark):
+    """Same row count, same distinct rows, same per-column multisets —
+    the two sides differ only in how often each row repeats."""
+    r1, r2, r3, r4 = (1, "a"), (2, "b"), (1, "b"), (2, "a")
+    df1 = spark.createDataFrame([r1, r1, r2, r2, r3, r4], "k int, s string")
+    df2 = spark.createDataFrame([r1, r2, r3, r3, r4, r4], "k int, s string")
+    assert set(df1.collect()) == set(df2.collect())
+    r = compare_dataframes(df1, df2)
+    assert r["row_count_match"] and all(r["column_match"].values())
+    assert r["content_match"] is False
+    assert compare_dataframes(df1, _shuffled(spark, df1))["content_match"] is True
+
+
+def test_nan_negative_zero_and_null_cells(spark):
+    nan = float("nan")
+    schema = "k int, v double, s string"
+    df1 = spark.createDataFrame(
+        [(1, nan, "a"), (2, -0.0, None), (3, None, "c"), (None, 1.5, None)],
+        schema,
+    )
+    assert compare_dataframes(df1, _shuffled(spark, df1))["content_match"] is True
+    # NaN and -0.0 swapped between rows: fingerprints agree, rows differ
+    df2 = spark.createDataFrame(
+        [(1, -0.0, "a"), (2, nan, None), (3, None, "c"), (None, 1.5, None)],
+        schema,
+    )
+    r = compare_dataframes(df1, df2)
+    assert all(r["column_match"].values())
+    assert r["content_match"] is False
+
+
 def test_group_overlap_report_exact_and_approximate(spark):
     from pyspark.sql import functions as F
 

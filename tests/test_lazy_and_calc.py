@@ -562,3 +562,82 @@ def test_lazy_groupby_dropna_matches_pandas(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="at least one key"):
         lazy.groupby([])
+
+
+# ------------------------------------ positional ops, multi-partition scan
+@pytest.fixture()
+def multi_partition_source(spark, tmp_path):
+    """One file of 8 row groups read with a 4 KB split size, so the scan
+    spans several partitions — the case a scan-order ordinal can get
+    wrong and a single-partition fixture cannot catch. Yields the path
+    and the frame pandas reads back from it."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    rng = np.random.default_rng(7)
+    n = 2000
+    pdf = pd.DataFrame(
+        {
+            "k": np.arange(n),
+            "v": rng.random(n),
+            "s": [f"row{i}" for i in rng.permutation(n)],
+        }
+    )
+    p = str(tmp_path / "multi.parquet")
+    pdf.to_parquet(p, index=False, row_group_size=250)
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "4096")
+    try:
+        parts = spark.read.parquet(p).select(F.spark_partition_id()).distinct()
+        assert parts.count() > 1
+        yield p, pd.read_parquet(p)
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_multi_partition_ordered_reads_follow_file_order(
+    spark, multi_partition_source
+):
+    p, pdf = multi_partition_source
+    lazy = LazySparkDF(spark, p)
+    pd.testing.assert_frame_equal(lazy.head(700), pdf.head(700))
+    pd.testing.assert_frame_equal(lazy.to_pandas(), pdf)
+    assert lazy["s"].tolist() == pdf.s.tolist()
+    chunks = list(lazy.iter_row_chunks(chunk_size=300))
+    pd.testing.assert_frame_equal(pd.concat(chunks, ignore_index=True), pdf)
+
+
+def test_multi_partition_array_setitem_aligns_positionally(
+    spark, multi_partition_source
+):
+    p, pdf = multi_partition_source
+    lazy = LazySparkDF(spark, p)
+    lazy["pos"] = list(range(len(pdf)))
+    out = lazy.to_pandas()
+    assert out.k.tolist() == pdf.k.tolist()
+    assert out.pos.tolist() == list(range(len(pdf)))
+
+    sub = pdf[pdf.v > 0.3]
+    flt = LazySparkDF(spark, p).filter("v > 0.3")
+    flt["pos"] = list(range(len(sub)))
+    out = flt.to_pandas()
+    assert out.k.tolist() == sub.k.tolist()
+    assert out.pos.tolist() == list(range(len(sub)))
+
+
+def test_multi_partition_boolean_loc_aligns_positionally(
+    spark, multi_partition_source
+):
+    import numpy as np
+
+    p, pdf = multi_partition_source
+    rng = np.random.default_rng(11)
+    mask = (rng.random(len(pdf)) < 0.4).tolist()
+    got = LazySparkDF(spark, p).loc[mask].to_pandas()
+    assert got.k.tolist() == pdf.k[mask].tolist()
+
+    sub = pdf[pdf.v > 0.3]
+    mask = (rng.random(len(sub)) < 0.4).tolist()
+    got = LazySparkDF(spark, p).filter("v > 0.3").loc[mask].to_pandas()
+    assert got.k.tolist() == sub.k[mask].tolist()
