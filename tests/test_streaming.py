@@ -84,15 +84,28 @@ def test_running_user_totals_stateful(spark, sf_dir, events_dir):
     from parq_tools_spark.streaming.events import running_user_totals
 
     stream = read_events_stream(spark, events_dir)
-    q = (
-        running_user_totals(stream)
-        .writeStream.format("memory")
-        .queryName("running_totals")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    # a processing-time timeout makes every trigger run another no-data
+    # batch (a timeout might have expired), so an availableNow query
+    # never ends; the 60-minute timeout cannot fire here, so run data
+    # batches only and let the query end once the files are consumed
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        q = (
+            running_user_totals(stream)
+            .writeStream.format("memory")
+            .queryName("running_totals")
+            .outputMode("update")
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set(key, before)
+    try:
+        assert q.awaitTermination(120)
+    finally:
+        q.stop()
     got = {
         r.user_id: (r.n_events, r.total_value)
         for r in spark.sql(
